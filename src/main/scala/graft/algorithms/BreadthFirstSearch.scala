@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{CheckpointPolicy, Columns, Graph}
+import graft.pregel.Pregel
 
 /** Multi-source / multi-target breadth-first search with an edge filter
   * (reference: algorithms/bfs.py:14-69).
@@ -78,16 +79,6 @@ final case class BreadthFirstSearch(
 object BreadthFirstSearch {
   import Columns._
 
-  /** Distance-only BFS — the scale default. The path-enumerating `run`
-    * above keeps the reference's walk semantics (cycle prevention by edge
-    * reuse only, bfs.py:57-58), whose frontier grows combinatorially on
-    * dense graphs; here the frontier is a (vertex, dist) set with
-    * visited-vertex pruning, so each vertex is expanded exactly once and
-    * the frontier is bounded by |V|.
-    *
-    * Multi-source: `dist` is the hop count from the NEAREST vertex
-    * matching `startExpr`. Returns (id, dist) for reached vertices only.
-    */
   /** Pseudo-diameter by the standard double-sweep (Magnien, Latapy &
     * Habib 2009 style lower bound): BFS from the minimum-id vertex, take
     * the farthest vertex u (ties → smallest id), BFS again from u — u's
@@ -141,7 +132,7 @@ object BreadthFirstSearch {
     * Deterministic: the per-vertex parent pick is a min over the
     * frontier, so the forest is a pure function of (edges, roots).
     *
-    * I/O profile (VERDICT r14 item 3): the symmetric closure is read
+    * I/O profile: the symmetric closure is read
     * once per round for diameter-many rounds, so it is materialized
     * ONCE — repartitioned by `src` and `persist`ed MEMORY_AND_DISK
     * (persist keeps the hash partitioning visible to the planner, so
@@ -150,18 +141,18 @@ object BreadthFirstSearch {
     * UnknownPartitioning and ride the storage band per round) — and
     * unpersisted before returning.
     *
-    * EARLY DECLINE (ADVICE r14): a graph whose effective diameter
-    * outruns the cap used to pay all `maxIterations` rounds before
-    * declining — more than the Borůvka fallback it defers to. When the
+    * EARLY DECLINE: a graph whose effective diameter outruns the cap must
+    * not pay all `maxIterations` rounds before declining — that costs
+    * more than the Borůvka fallback it defers to. When the
     * caller knows the reachable vertex count (`totalVertices` —
     * [[graft.sources.GraphIO.buildForest]] reads it off the narrow
     * component table), the loop declines as soon as the frontier has
     * not grown for 4 consecutive rounds AND the round budget is mostly
-    * spent (≤ a quarter of `maxIterations` remains — ADVICE r15: an
-    * early stall on a stalk-then-hub topology says nothing about
-    * regrowth, so the bound only fires once regrowth has provably
-    * little room) AND even `frontier × remaining-rounds` new vertices
-    * per round cannot cover the unvisited remainder — at that point
+    * spent (≤ a quarter of `maxIterations` remains: an early stall on a
+    * stalk-then-hub topology says nothing about regrowth, so the bound
+    * only fires once regrowth has provably little room) AND even
+    * `frontier × remaining-rounds` new vertices per round cannot cover
+    * the unvisited remainder — at that point
     * completing within the cap is all but impossible, and a wrong
     * guess costs only the (always-correct) fallback.
     */
@@ -199,16 +190,17 @@ object BreadthFirstSearch {
         stall = if (n > frontierN) 0 else stall + 1
         frontierN = n
         visitedN += n
-        // lazy union of pinned frontiers — no per-depth O(V) copy job
-        // (the distances() device, OPTIMIZATION_r17); ≤ 64 union arms
+        // lazy union of pinned frontiers: the anti-join reads the same
+        // rows as a re-pinned visited set without a per-depth O(V) copy
+        // job; the plan grows by one union arm per round (≤ maxIterations)
         visited = visited.unionByName(frontier)
-        // TIGHTENED (ADVICE r15): the coverage bound assumes the
-        // frontier never regrows, which a stalk-then-hub topology (a
-        // long path into a huge star) violates — a brief stall early in
-        // a long round budget must not decline a BFS that would finish
-        // comfortably inside the cap. Require the budget to be mostly
-        // spent (last quarter) so regrowth has provably little room;
-        // a wrong guess still only defers to the correct fallback.
+        // the coverage bound assumes the frontier never regrows, which a
+        // stalk-then-hub topology (a long path into a huge star) violates
+        // — a brief stall early in a long round budget must not decline a
+        // BFS that would finish comfortably inside the cap. Require the
+        // budget to be mostly spent (last quarter) so regrowth has
+        // provably little room; a wrong guess still only defers to the
+        // correct fallback.
         declined = totalVertices.exists { total =>
           val remaining = total - visitedN
           remaining > 0L && frontierN > 0L && stall >= 4 &&
@@ -231,36 +223,41 @@ object BreadthFirstSearch {
     } finally sym.unpersist(blocking = false)
   }
 
+  /** Distance-only BFS — the scale default. The path-enumerating `run`
+    * above keeps the reference's walk semantics (cycle prevention by edge
+    * reuse only, bfs.py:57-58), whose frontier grows combinatorially on
+    * dense graphs; here each vertex keeps only its least distance, so the
+    * state is bounded by |V|.
+    *
+    * A [[Pregel]] client over the directed graph of the edges that pass
+    * `edgeExpr` (both directions of each edge when `g` is undirected):
+    * start vertices hold 0, every other vertex null; a vertex whose
+    * distance changed sends `dist + 1` along its out-edges, and a vertex
+    * keeps the least distance it has seen. Superstep k reaches the
+    * vertices at k hops, so `maxIterations` is the depth cap. Pregel picks
+    * the backend: on a graph under its cap the supersteps run on the
+    * driver.
+    *
+    * Multi-source: `dist` is the hop count from the NEAREST vertex
+    * matching `startExpr`. Returns (id, dist: int) for reached vertices
+    * only.
+    */
   def distances(
       g: Graph,
       startExpr: Column,
       edgeExpr: Column = lit(true),
       maxIterations: Int = 30,
       checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
-    val DIST = "dist"
-    val edges = checkpoint.pin(
-      (if (g.directed) g.edges else g.symmetricEdges)
-        .filter(edgeExpr).select(col(SRC), col(DST)))
-    // `visited` is a LAZY UNION of the pinned per-depth frontiers
-    // (OPTIMIZATION_r17): the loop previously re-pinned the whole
-    // visited set every round — an O(V) copy job per depth on top of
-    // the frontier pin. The anti-join reads the same rows either way
-    // (each frame is already materialized), the plan depth grows only
-    // linearly in maxIterations, and the returned frame is the same
-    // row set.
-    var visited = checkpoint.pin(
-      g.vertices.filter(startExpr).select(col(ID), lit(0).as(DIST)))
-    var frontier = visited
-    var depth = 0
-    while (depth < maxIterations && !frontier.isEmpty) {
-      depth += 1
-      frontier = checkpoint.pin(
-        frontier.join(edges, frontier(ID) === edges(SRC))
-          .select(edges(DST).as(ID)).distinct()
-          .join(visited, Seq(ID), "left_anti")
-          .select(col(ID), lit(depth).as(DIST)))
-      visited = visited.unionByName(frontier)
-    }
-    visited
+    val edges = (if (g.directed) g.edges else g.symmetricEdges).filter(edgeExpr)
+    Pregel(
+      initialState = when(startExpr, lit(0)),
+      aggExpr = min(col(MSG)),
+      msgToDst = Some(col(STATE) + 1),
+      updateExpr = Some(least(col(STATE), col(MSG))),
+      maxIterations = maxIterations,
+      checkpoint = checkpoint)
+      .run(Graph(g.vertices, edges, directed = true))
+      .where(col(STATE).isNotNull)
+      .select(col(ID), col(STATE).as("dist"))
   }
 }

@@ -1,10 +1,15 @@
 package graft.algorithms
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{CheckpointPolicy, Columns, Graph}
-import graft.pregel.Pregel
+import graft.pregel.{Pregel, PregelBackend}
 
 /** Strongly connected components of a directed graph.
   *
@@ -29,8 +34,9 @@ import graft.pregel.Pregel
   *
   * Cost: each round is two Pregel min-propagations over the shrinking
   * residual edge set; outer rounds are bounded by the "SCC level depth",
-  * not the SCC count. All data movement is per-round joins/aggregations —
-  * nothing driver-side but the convergence scalars.
+  * not the SCC count. Pregel runs a propagation on the driver when the
+  * residual graph fits its cap (one collect instead of a job per checked
+  * superstep), and as per-superstep joins/aggregations otherwise.
   */
 final case class StronglyConnectedComponents(
     maxIterations: Int = 10,
@@ -39,22 +45,9 @@ final case class StronglyConnectedComponents(
     saltBuckets: Int = 0) {
   import Columns._
 
-  private def minReach(vertices: DataFrame, edges: DataFrame, forward: Boolean): DataFrame = {
-    // batch-bounded driver fast path (OPTIMIZATION_r18, the UnionFind
-    // cap-and-decline device): a min-label propagation to its fixed
-    // point costs one driver round-trip per graph-diameter superstep
-    // distributed — pure job overhead on a small residual graph (g22
-    // measured 526 jobs for a 30-vertex graph). The in-memory worklist
-    // reaches the SAME unique fixpoint (monotone propagation); over the
-    // cap the Pregel path below runs exactly as before.
-    UnionFind.minReach(vertices, edges, SRC, DST, forward) match {
-      case Some(st) => st
-      case None => minReachDistributed(vertices, edges, forward)
-    }
-  }
-
-  private def minReachDistributed(
-      vertices: DataFrame, edges: DataFrame, forward: Boolean): DataFrame = {
+  private def minReach(
+      vertices: DataFrame, edges: DataFrame, forward: Boolean,
+      backend: Option[PregelBackend]): DataFrame = {
     val g = Graph(vertices, edges, directed = true)
     val res = Pregel(
       initialState = col(ID),
@@ -69,7 +62,9 @@ final case class StronglyConnectedComponents(
       convergenceCheckInterval = 8,
       // min is self-decomposable — hub-salted two-level aggregation
       saltBuckets = saltBuckets)
-      .runWithStatus(g)
+      .runOn(g, backend)
+    // the cap holds on either backend: a residual graph small enough for
+    // the driver fails here exactly as a distributed one does
     if (!res.converged)
       throw new IllegalStateException(
         s"SCC min-label propagation did not reach a fixed point within " +
@@ -79,40 +74,44 @@ final case class StronglyConnectedComponents(
     res.state.select(col(ID), col(STATE))
   }
 
-  def run(g: Graph): DataFrame = {
+  def run(g: Graph): DataFrame = run(g, None)
+
+  /** `backend` forces the backend of every inner propagation. */
+  private[graft] def run(g: Graph, backend: Option[PregelBackend]): DataFrame = {
     require(g.directed, "SCC is defined for directed graphs; use ConnectedComponents for undirected")
     var vertices = checkpoint.pin(g.vertices.select(col(ID)))
     // edge_id column is irrelevant here; keep endpoints only
     var edges = checkpoint.pin(g.edges.select(col(SRC), col(DST)))
     var result: Option[DataFrame] = None
-    var i = 0
-    while (i < maxIterations && !vertices.isEmpty) {
-      // the two propagations are INDEPENDENT (each reads only the pinned
-      // vertices/edges), so issue them as concurrent Spark job streams:
-      // a single propagation's supersteps are latency-bound driver
-      // round-trips over small per-superstep jobs that rarely saturate
-      // the executors — interleaving fwd and bwd fills that slack.
-      // Results are unchanged: each propagation is deterministic and
-      // shares nothing mutable (Spark actions are thread-safe).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fwdF = Future(minReach(vertices, edges, forward = true))
-      val bwdF = Future(minReach(vertices, edges, forward = false))
-      val fwd = Await.result(fwdF, Duration.Inf).withColumnRenamed(STATE, "_fwd")
-      val bwd = Await.result(bwdF, Duration.Inf).withColumnRenamed(STATE, "_bwd")
-      val labelled = fwd.join(bwd, Seq(ID))
-      val resolved = checkpoint.pin(labelled
-        .filter(col("_fwd") === col("_bwd"))
-        .select(col(ID), col("_fwd").as(COMPONENT)))
-      result = Some(result.fold(resolved)(_.unionByName(resolved)))
-      vertices = checkpoint.pin(labelled.filter(col("_fwd") =!= col("_bwd"))
-        .select(col(ID)))
-      edges = checkpoint.pin(edges
-        .join(vertices.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
-        .join(vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"))
-      i += 1
-    }
+    // the two propagations are INDEPENDENT (each reads only the pinned
+    // vertices/edges), so they run as concurrent job streams: a
+    // propagation's supersteps are latency-bound driver round trips over
+    // small jobs that rarely saturate the executors, and interleaving fwd
+    // and bwd fills that slack. Each is deterministic and shares nothing
+    // mutable (Spark actions are thread-safe). The two threads are this
+    // call's own, so the blocking waits take no shared pool's workers.
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      var i = 0
+      while (i < maxIterations && !vertices.isEmpty) {
+        val fwdF = Future(minReach(vertices, edges, forward = true, backend))
+        val bwdF = Future(minReach(vertices, edges, forward = false, backend))
+        val fwd = Await.result(fwdF, Duration.Inf).withColumnRenamed(STATE, "_fwd")
+        val bwd = Await.result(bwdF, Duration.Inf).withColumnRenamed(STATE, "_bwd")
+        val labelled = fwd.join(bwd, Seq(ID))
+        val resolved = checkpoint.pin(labelled
+          .filter(col("_fwd") === col("_bwd"))
+          .select(col(ID), col("_fwd").as(COMPONENT)))
+        result = Some(result.fold(resolved)(_.unionByName(resolved)))
+        vertices = checkpoint.pin(labelled.filter(col("_fwd") =!= col("_bwd"))
+          .select(col(ID)))
+        edges = checkpoint.pin(edges
+          .join(vertices.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
+          .join(vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"))
+        i += 1
+      }
+    } finally pool.shutdown()
     // outer cap reached with unresolved vertices: label each as its own
     // singleton (conservative refinement, like the reference's iteration caps)
     val rest = vertices.select(col(ID), col(ID).as(COMPONENT))

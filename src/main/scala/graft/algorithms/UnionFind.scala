@@ -62,67 +62,6 @@ object UnionFind {
       chosen.toSeq.toDF(srcCol, dstCol)
     }
 
-  /** Driver-side MIN-LABEL REACHABILITY fixpoint for batch-bounded
-    * DIRECTED graphs — the SCC inner-propagation device
-    * (OPTIMIZATION_r18). Computes state(v) = min id over {v} ∪
-    * ancestors(v) (`forward = true`, labels flow src→dst) or over
-    * {v} ∪ descendants(v) (`forward = false`): exactly the unique fixed
-    * point the distributed Pregel min-propagation converges to — the
-    * propagation is monotone (labels only decrease, bounded below), so
-    * the fixpoint is unique and engine-independent; labels are
-    * identical row for row. Same cap-and-decline contract as
-    * [[minLabel]]: None over `maxEdges` edges (or vertices) or on
-    * non-integral ids — callers fall back to the distributed path, so
-    * nothing corpus-sized ever lands on the driver. A worklist
-    * relaxation (each pop relaxes one vertex's out-edges; a vertex
-    * re-enters only when its label strictly drops) reaches the fixpoint
-    * in microseconds at batch scale where the distributed propagation
-    * pays one driver round-trip per graph-diameter superstep.
-    *
-    * Output (id, state): one row per row of `vertices` (which must
-    * cover every edge endpoint — the SCC loop's residual contract),
-    * sorted by id for determinism.
-    */
-  def minReach(
-      vertices: DataFrame, edges: DataFrame,
-      srcCol: String, dstCol: String, forward: Boolean,
-      maxEdges: Int = 100000): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
-    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    if (!integral(vertices.schema("id").dataType)) return None
-    collectIntegral(edges, srcCol, dstCol, maxEdges).flatMap { es =>
-      val vrows = vertices.select(col("id").cast("long"))
-        .limit(maxEdges + 1).collect()
-      if (vrows.length > maxEdges) None
-      else {
-        val vs = vrows.map(_.getLong(0)).sorted
-        val label = scala.collection.mutable.Map.empty[Long, Long]
-        vs.foreach(v => label(v) = v)
-        val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-        es.foreach { case (s, d) =>
-          val (from, to) = if (forward) (s, d) else (d, s)
-          adj.getOrElseUpdate(from, scala.collection.mutable.ArrayBuffer.empty) += to
-        }
-        val queue = new java.util.ArrayDeque[Long]()
-        val inQueue = scala.collection.mutable.Set.empty[Long]
-        vs.foreach { v => queue.add(v); inQueue += v }
-        while (!queue.isEmpty) {
-          val u = queue.poll(); inQueue -= u
-          val lu = label(u)
-          adj.get(u).foreach(_.foreach { w =>
-            if (lu < label(w)) {
-              label(w) = lu
-              if (!inQueue(w)) { queue.add(w); inQueue += w }
-            }
-          })
-        }
-        val spark = vertices.sparkSession
-        import spark.implicits._
-        Some(vs.toSeq.map(v => (v, label(v))).toDF("id", graft.core.Columns.STATE))
-      }
-    }
-  }
-
   /** The shared cap-and-decline collect: Some(edge pairs) only when both
     * key columns are integral (a string id would cast to null — NPE at
     * getLong — and a NUMERIC string would get numeric min-label ordering

@@ -5,12 +5,24 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{CheckpointPolicy, Columns, Graph, GraphUtil}
 
+/** Where a Pregel run executed its supersteps. */
+sealed trait PregelBackend
+
+object PregelBackend {
+  /** In the driver's memory, over the collected vertices and edges. */
+  case object Driver extends PregelBackend
+  /** As Spark jobs: one job per checked superstep. */
+  case object Distributed extends PregelBackend
+}
+
 /** Outcome of a Pregel run: the final state plus whether the loop reached
   * a fixed point (no vertex changed) before `maxIterations` — callers that
   * depend on full convergence for *correctness* (e.g. SCC's min-label
   * propagation) must check `converged` instead of trusting truncated
-  * labels. */
-final case class PregelResult(state: DataFrame, converged: Boolean, iterations: Int)
+  * labels — and the backend that ran. Both backends give the same state
+  * schema and rows, `converged` and `iterations`. */
+final case class PregelResult(
+    state: DataFrame, converged: Boolean, iterations: Int, backend: PregelBackend)
 
 /** Vertex-centric superstep engine.
   *
@@ -30,6 +42,25 @@ final case class PregelResult(state: DataFrame, converged: Boolean, iterations: 
   *    lineage stays O(1);
   *  - the upsert union carries an `_updated` marker so `changed` is derived
   *    from the already-materialized state instead of a second job.
+  *
+  * Backends. On a small graph the distributed loop's cost is almost all
+  * job launch, one driver round trip per checked superstep, so the engine
+  * picks where the supersteps run (see [[PregelResult.backend]]). The
+  * DRIVER backend runs them in memory when ALL of these hold:
+  *  - `messageAggregator` is unset, `saltBuckets <= 1` and `checkpoint`
+  *    is not [[CheckpointPolicy.Reliable]] (each asks for the
+  *    distributed physical plan);
+  *  - the vertex `id` and the edge `src`/`dst` columns share one integral
+  *    type;
+  *  - every expression is deterministic, `aggExpr` is a single Catalyst
+  *    `DeclarativeAggregate` (min, max, sum, count, avg, ...) over
+  *    [[Columns.MSG]], and the state type is stable across supersteps;
+  *  - the vertices and the edges together fit [[Pregel.DriverCap]] rows,
+  *    checked by a count that reads at most `cap + 1` rows per partition
+  *    and returns only the counts. Only then are they collected, so
+  *    nothing over the cap lands on the driver.
+  * Otherwise the DISTRIBUTED backend runs. Both run the same synchronous
+  * supersteps (see `DriverSupersteps`) and return the same result.
   *
   * @param initialState  vertex state before superstep 1; may use all vertex columns
   * @param aggExpr       aggregate over [[Columns.MSG]] combining inbound messages
@@ -109,66 +140,46 @@ final case class Pregel(
     messageAggregator: Option[DataFrame => DataFrame] = None,
     superstepListener: Option[(Int, Double) => Unit] = None) {
   import Columns._
+  import Pregel.{SALT, UPDATED}
 
   require(msgToSrc.nonEmpty || msgToDst.nonEmpty,
     "need at least one of msgToSrc or msgToDst")
   require(maxIterations > 0, "maxIterations must be greater than 0")
   require(convergenceCheckInterval > 0, "convergenceCheckInterval must be > 0")
 
-  private val UPDATED = "_updated"
-  private val SALT = "_salt"
-
   def run(g: Graph): DataFrame = runWithStatus(g).state
 
-  def runWithStatus(g: Graph): PregelResult = {
-    val update = updateExpr.getOrElse(col(MSG))
-    // the send join only needs the endpoints; materialize once for the loop
-    val edges = checkpoint.pin(g.edges.select(col(SRC), col(DST)))
+  def runWithStatus(g: Graph): PregelResult = runOn(g, None)
 
-    var state = g.vertices
-      .withColumn(STATE, initialState)
-      .withColumn(OLD_STATE, lit(null))
-    var changed = state
+  /** `backend` forces one backend (forcing the driver still needs every
+    * condition but the size cap, and fails when one does not hold);
+    * `cap` replaces [[Pregel.DriverCap]]. */
+  private[graft] def runOn(
+      g: Graph, backend: Option[PregelBackend], cap: Int = Pregel.DriverCap): PregelResult = {
+    val driver =
+      if (backend.contains(PregelBackend.Distributed)) None
+      else DriverSupersteps.compile(this, g)
+    backend match {
+      case Some(PregelBackend.Driver) =>
+        driver.getOrElse(throw new IllegalArgumentException(
+          "this Pregel program cannot run on the driver backend")).run()
+      case _ if driver.nonEmpty && DriverSupersteps.fits(g, cap) => driver.get.run()
+      case _ => runDistributed(g)
+    }
+  }
+
+  /** The superstep loop both backends share. `step` runs one superstep
+    * and returns the test "no vertex changed in it", evaluated only on the
+    * supersteps whose convergence is checked. */
+  private[pregel] def iterate(step: () => () => Boolean): (Boolean, Int) = {
     var converged = false
     var stepClock = System.nanoTime()
     var i = 0
     while (i < maxIterations && !converged) {
-      val messages = GraphUtil.multipleUnion(Seq(
-        msgToSrc.map(m => send(changed, edges, m, from = DST, to = SRC)),
-        msgToDst.map(m => send(changed, edges, m, from = SRC, to = DST))).flatten)
-
-      val aggMessages =
-        if (messageAggregator.nonEmpty) messageAggregator.get(messages)
-        else if (saltBuckets > 1)
-          messages
-            .withColumn(SALT, pmod(spark_partition_id().cast("long"), lit(saltBuckets.toLong)))
-            .groupBy(col(ID), col(SALT)).agg(aggExpr.as(MSG))
-            .groupBy(col(ID)).agg(aggExpr.as(MSG))
-        else messages.groupBy(col(ID)).agg(aggExpr.as(MSG))
-
-      val updated = aggMessages
-        .join(state, Seq(ID))
-        .withColumns(Map(OLD_STATE -> col(STATE), STATE -> update))
-        .drop(MSG)
-      // DataFrames have no in-place update: upsert = anti join + union
-      // (pregel.py:66-68), by name rather than position
-      val notUpdated = state.join(messages.select(col(ID)), Seq(ID), "left_anti")
-
-      // lazy checkpoint: the convergence count below is the ONE job per
-      // superstep — it materializes every partition of `next` (truncating
-      // lineage) and counts changed vertices in the same pass
-      val next = checkpoint.pin(
-        updated.withColumn(UPDATED, lit(true))
-          .unionByName(notUpdated.withColumn(UPDATED, lit(false))),
-        eager = false)
-
-      state = next.drop(UPDATED)
-      changed = next
-        .filter(col(UPDATED) && comparison(col(STATE), col(OLD_STATE)))
-        .drop(UPDATED)
+      val quiet = step()
       i += 1
       if (i % convergenceCheckInterval == 0 || i == maxIterations) {
-        converged = changed.count() == 0
+        converged = quiet()
         superstepListener.foreach { f =>
           val now = System.nanoTime()
           f(i, (now - stepClock) / 1e9)
@@ -176,7 +187,60 @@ final case class Pregel(
         }
       }
     }
-    PregelResult(state, converged, i)
+    (converged, i)
+  }
+
+  /** The state before superstep 1. */
+  private[pregel] def initial(g: Graph): DataFrame =
+    g.vertices
+      .withColumn(STATE, initialState)
+      .withColumn(OLD_STATE, lit(null))
+
+  /** One superstep's plan: the next state, its rows marked [[Pregel.UPDATED]]
+    * when they received a message. */
+  private[pregel] def superstep(state: DataFrame, changed: DataFrame, edges: DataFrame): DataFrame = {
+    val update = updateExpr.getOrElse(col(MSG))
+    val messages = GraphUtil.multipleUnion(Seq(
+      msgToSrc.map(m => send(changed, edges, m, from = DST, to = SRC)),
+      msgToDst.map(m => send(changed, edges, m, from = SRC, to = DST))).flatten)
+
+    val aggMessages =
+      if (messageAggregator.nonEmpty) messageAggregator.get(messages)
+      else if (saltBuckets > 1)
+        messages
+          .withColumn(SALT, pmod(spark_partition_id().cast("long"), lit(saltBuckets.toLong)))
+          .groupBy(col(ID), col(SALT)).agg(aggExpr.as(MSG))
+          .groupBy(col(ID)).agg(aggExpr.as(MSG))
+      else messages.groupBy(col(ID)).agg(aggExpr.as(MSG))
+
+    val updated = aggMessages
+      .join(state, Seq(ID))
+      .withColumns(Map(OLD_STATE -> col(STATE), STATE -> update))
+      .drop(MSG)
+    // DataFrames have no in-place update: upsert = anti join + union
+    // (pregel.py:66-68), by name rather than position
+    val notUpdated = state.join(messages.select(col(ID)), Seq(ID), "left_anti")
+    updated.withColumn(UPDATED, lit(true))
+      .unionByName(notUpdated.withColumn(UPDATED, lit(false)))
+  }
+
+  private def runDistributed(g: Graph): PregelResult = {
+    // the send join only needs the endpoints; materialize once for the loop
+    val edges = checkpoint.pin(g.edges.select(col(SRC), col(DST)))
+    var state = initial(g)
+    var changed = state
+    val (converged, i) = iterate { () =>
+      // lazy checkpoint: the convergence count is the ONE job per checked
+      // superstep — it materializes every partition of `next` (truncating
+      // lineage) and counts changed vertices in the same pass
+      val next = checkpoint.pin(superstep(state, changed, edges), eager = false)
+      state = next.drop(UPDATED)
+      changed = next
+        .filter(col(UPDATED) && comparison(col(STATE), col(OLD_STATE)))
+        .drop(UPDATED)
+      () => changed.count() == 0
+    }
+    PregelResult(state, converged, i, PregelBackend.Distributed)
   }
 
   /** One send direction (pregel.py:77-90): evaluate the message expression
@@ -193,4 +257,13 @@ final case class Pregel(
       .select(col(ID).as(from), msgExpr.as(MSG))
       .join(edges, Seq(from))
       .select(col(to).as(ID), col(MSG))
+}
+
+object Pregel {
+  /** Row cap of the driver backend: the vertices and the edges together
+    * must fit it. */
+  val DriverCap: Int = 100000
+
+  private[pregel] val UPDATED = "_updated"
+  private val SALT = "_salt"
 }

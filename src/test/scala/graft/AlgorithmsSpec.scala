@@ -171,6 +171,26 @@ class AlgorithmsSpec extends SparkSpec {
     assert(e.getMessage.contains("fixed point"))
   }
 
+  test("SCC: the propagation cap fails loudly on the driver backend itself") {
+    import spark.implicits._
+    import graft.pregel.PregelBackend
+    val n = 30L
+    val g = Graph.index(
+      (0L until n).toDF("id"),
+      (0L until n).map(k => (k, (k + 1) % n)).toDF("src", "dst"),
+      directed = true)
+    // forcing the driver fails with IllegalArgumentException when the
+    // propagation cannot run there, so these assert the driver ran
+    val e = intercept[IllegalStateException] {
+      StronglyConnectedComponents(propagationIterations = 5)
+        .run(g, Some(PregelBackend.Driver)).collect()
+    }
+    assert(e.getMessage.contains("fixed point"))
+    val whole = StronglyConnectedComponents().run(g, Some(PregelBackend.Driver))
+    assert(whole.select(COMPONENT).distinct().count() === 1)
+    assert(whole.count() === n)
+  }
+
   test("label propagation: labels stay within the component and runs are deterministic") {
     val g = Fixtures.labelled(spark, directed = false)
     val lp = LabelPropagation(maxIterations = 10).run(g)
