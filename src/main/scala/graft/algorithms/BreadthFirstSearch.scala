@@ -226,38 +226,80 @@ object BreadthFirstSearch {
   /** Distance-only BFS — the scale default. The path-enumerating `run`
     * above keeps the reference's walk semantics (cycle prevention by edge
     * reuse only, bfs.py:57-58), whose frontier grows combinatorially on
-    * dense graphs; here each vertex keeps only its least distance, so the
-    * state is bounded by |V|.
+    * dense graphs; here each vertex is reached once, at its least depth,
+    * so the work is bounded by |V| + |E|.
     *
-    * A [[Pregel]] client over the directed graph of the edges that pass
-    * `edgeExpr` (both directions of each edge when `g` is undirected):
-    * start vertices hold 0, every other vertex null; a vertex whose
-    * distance changed sends `dist + 1` along its out-edges, and a vertex
-    * keeps the least distance it has seen. Superstep k reaches the
-    * vertices at k hops, so `maxIterations` is the depth cap. Pregel picks
-    * the backend: on a graph under its cap the supersteps run on the
-    * driver.
+    * The traversal runs over the edges that pass `edgeExpr` (both
+    * directions of each edge when `g` is undirected) and end at a vertex
+    * row: an id with no vertex row is never reached, and nothing is
+    * reached through it. At most `maxIterations` hops are taken.
+    *
+    * Two equivalent engines. When the graph fits [[Pregel]]'s driver cap
+    * it runs as a Pregel min-distance program on the driver backend:
+    * start vertices hold 0, a vertex whose distance changed sends
+    * `dist + 1` along its out-edges, a vertex keeps the least distance it
+    * has seen. Over the cap a frontier loop runs, whose per-depth work is
+    * a join of the new frontier only — distributed Pregel would join the
+    * whole vertex state every superstep.
     *
     * Multi-source: `dist` is the hop count from the NEAREST vertex
-    * matching `startExpr`. Returns (id, dist: int) for reached vertices
-    * only.
+    * matching `startExpr`. Returns (id, dist: non-null int) for reached
+    * vertices only.
     */
   def distances(
       g: Graph,
       startExpr: Column,
       edgeExpr: Column = lit(true),
       maxIterations: Int = 30,
-      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
-    val edges = (if (g.directed) g.edges else g.symmetricEdges).filter(edgeExpr)
-    Pregel(
+      checkpoint: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
+    distances(g, startExpr, edgeExpr, maxIterations, checkpoint, Pregel.DriverCap)
+
+  /** `driverCap` replaces the Pregel driver backend's cap. */
+  private[graft] def distances(
+      g: Graph,
+      startExpr: Column,
+      edgeExpr: Column,
+      maxIterations: Int,
+      checkpoint: CheckpointPolicy,
+      driverCap: Int): DataFrame = {
+    val DIST = "dist"
+    // one materialization serves the size check and either engine
+    val edges = checkpoint.pin(
+      (if (g.directed) g.edges else g.symmetricEdges)
+        .filter(edgeExpr).select(col(SRC), col(DST))
+        .join(g.vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"))
+    val minDistance = Pregel(
       initialState = when(startExpr, lit(0)),
       aggExpr = min(col(MSG)),
       msgToDst = Some(col(STATE) + 1),
       updateExpr = Some(least(col(STATE), col(MSG))),
       maxIterations = maxIterations,
       checkpoint = checkpoint)
-      .run(Graph(g.vertices, edges, directed = true))
-      .where(col(STATE).isNotNull)
-      .select(col(ID), col(STATE).as("dist"))
+    minDistance.runOnDriver(Graph(g.vertices, edges, directed = true), driverCap) match {
+      case Some(res) =>
+        // the null rows are gone; coalesce only makes `dist` non-nullable,
+        // as the frontier loop's literal depths are
+        res.state.where(col(STATE).isNotNull)
+          .select(col(ID), coalesce(col(STATE), lit(0)).as(DIST))
+      case None =>
+        // `visited` is a lazy union of the pinned per-depth frontiers: the
+        // anti-join reads the same rows as a re-pinned visited set without
+        // a per-depth O(V) copy job, and the plan grows by one union arm
+        // per depth (<= maxIterations)
+        var visited = checkpoint.pin(
+          g.vertices.filter(startExpr).select(col(ID), lit(0).as(DIST)))
+        var frontier = visited
+        var depth = 0
+        while (depth < maxIterations && !frontier.isEmpty) {
+          depth += 1
+          frontier = checkpoint.pin(
+            frontier.join(edges, frontier(ID) === edges(SRC))
+              .select(edges(DST).as(ID)).distinct()
+              .join(visited, Seq(ID), "left_anti")
+              .select(col(ID), lit(depth).as(DIST)))
+          visited = visited.unionByName(frontier)
+        }
+        visited
+    }
   }
 }

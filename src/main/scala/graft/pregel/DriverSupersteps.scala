@@ -1,7 +1,8 @@
 package graft.pregel
 
 import scala.collection.mutable
-import scala.util.control.NonFatal
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -132,21 +133,39 @@ private[pregel] object DriverSupersteps {
     try body finally sc.setJobDescription(prior)
   }
 
-  /** The vertices and the edges together fit `cap` rows. One job without a
-    * shuffle: each partition reads at most `cap + 1` rows and returns only
-    * its count, so a decline brings no rows to the driver. */
+  /** The vertices fit `cap` rows and so do the edges, each frame on its
+    * own. One job without a shuffle: each partition reads at most
+    * `cap + 1` rows and returns only its count. The driver sums the counts
+    * per frame as partitions finish and cancels the job once a sum passes
+    * the cap, so a decline stops after a few partitions whatever the
+    * graph's size, and brings no rows to the driver. */
   def fits(g: Graph, cap: Int): Boolean = {
     val spark = g.vertices.sparkSession
-    val rows = g.vertices.select(lit(0)).queryExecution.toRdd
-      .union(g.edges.select(lit(0)).queryExecution.toRdd)
-    val counts = described(spark, "size check") {
-      spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-        var n = 0
-        while (n <= cap && it.hasNext) { it.next(); n += 1 }
-        n
-      })
+    val vertexRdd = g.vertices.select(lit(0)).queryExecution.toRdd
+    val rows = vertexRdd.union(g.edges.select(lit(0)).queryExecution.toRdd)
+    val vertexParts = vertexRdd.partitions.length
+    val sums = Array(0L, 0L) // vertices, edges
+    val over = Promise[Unit]()
+    val job = described(spark, "size check") {
+      spark.sparkContext.submitJob(rows,
+        (it: Iterator[InternalRow]) => {
+          var n = 0
+          while (n <= cap && it.hasNext) { it.next(); n += 1 }
+          n
+        },
+        rows.partitions.indices,
+        // the job's result handler: called once per partition, never concurrently
+        (part: Int, n: Int) => {
+          val frame = if (part < vertexParts) 0 else 1
+          sums(frame) += n
+          if (sums(frame) > cap) over.trySuccess(())
+        },
+        ())
     }
-    counts.map(_.toLong).sum <= cap
+    Await.ready(Future.firstCompletedOf(Seq(job, over.future))(ExecutionContext.parasitic),
+      Duration.Inf)
+    if (over.isCompleted) { job.cancel(); false }
+    else { Await.result(job, Duration.Inf); true }
   }
 
   private def asLong(v: Any): Long = v match {
@@ -166,10 +185,11 @@ private[pregel] object DriverSupersteps {
   /** A `DeclarativeAggregate` evaluated by hand over (id, message) rows. */
   private[pregel] final class Fold(fn: DeclarativeAggregate, input: Seq[Attribute]) {
     private val buffer = fn.aggBufferAttributes
-    private val initial = fn.initialValues.map(_.eval()).toArray
+    private lazy val initial = fn.initialValues.map(_.eval()).toArray
     private val updates = fn.updateExpressions.map(BindReferences.bindReference(_, buffer ++ input))
     private val evaluate = BindReferences.bindReference(fn.evaluateExpression, buffer)
-    def evaluable: Boolean = (evaluate +: updates).forall(DriverSupersteps.evaluable)
+    def evaluable: Boolean = fn.initialValues.forall(_.foldable) &&
+      (evaluate +: updates).forall(DriverSupersteps.evaluable)
     def zero: InternalRow = new GenericInternalRow(initial.clone())
     def add(buf: InternalRow, id: Any, msg: Any): InternalRow = {
       val row = new JoinedRow(buf, InternalRow(id, msg))
@@ -184,13 +204,12 @@ private[pregel] object DriverSupersteps {
 
   /** Some(backend) when `p` may run on the driver for `g`, apart from the
     * size cap; None sends it to the distributed backend. Analysis only:
-    * no Spark job runs here. */
-  def compile(p: Pregel, g: Graph): Option[DriverSupersteps] =
+    * no Spark job runs here. None comes only from the conditions checked
+    * below; any exception is a fault of the program or of this analysis,
+    * and propagates. */
+  def compile(p: Pregel, g: Graph): Option[DriverSupersteps] = {
     if (p.messageAggregator.nonEmpty || p.saltBuckets > 1 ||
-      p.checkpoint == CheckpointPolicy.Reliable) None
-    else try compileExpressions(p, g) catch { case NonFatal(_) => None }
-
-  private def compileExpressions(p: Pregel, g: Graph): Option[DriverSupersteps] = {
+      p.checkpoint == CheckpointPolicy.Reliable) return None
     val spark = g.vertices.sparkSession
     val idType = g.vertices.schema(ID).dataType
     if (!Integral(idType) || g.edges.schema(SRC).dataType != idType ||
@@ -221,6 +240,7 @@ private[pregel] object DriverSupersteps {
         case Project(Seq(Alias(e, _)), child) =>
           if (!oldStateOk && e.references.exists(_.name == OLD_STATE)) None
           else Some(BindReferences.bindReference(e, child.output))
+        case _ => None
       }
 
     val stateRel = empty(schema)

@@ -55,10 +55,11 @@ final case class PregelResult(
   *  - every expression is deterministic, `aggExpr` is a single Catalyst
   *    `DeclarativeAggregate` (min, max, sum, count, avg, ...) over
   *    [[Columns.MSG]], and the state type is stable across supersteps;
-  *  - the vertices and the edges together fit [[Pregel.DriverCap]] rows,
-  *    checked by a count that reads at most `cap + 1` rows per partition
-  *    and returns only the counts. Only then are they collected, so
-  *    nothing over the cap lands on the driver.
+  *  - the vertices fit [[Pregel.DriverCap]] rows and so do the edges,
+  *    checked by a count that reads at most `cap + 1` rows per partition,
+  *    returns only the counts and stops once a frame passes the cap. Only
+  *    then are they collected, so nothing over the cap lands on the
+  *    driver.
   * Otherwise the DISTRIBUTED backend runs. Both run the same synchronous
   * supersteps (see `DriverSupersteps`) and return the same result.
   *
@@ -155,18 +156,20 @@ final case class Pregel(
     * condition but the size cap, and fails when one does not hold);
     * `cap` replaces [[Pregel.DriverCap]]. */
   private[graft] def runOn(
-      g: Graph, backend: Option[PregelBackend], cap: Int = Pregel.DriverCap): PregelResult = {
-    val driver =
-      if (backend.contains(PregelBackend.Distributed)) None
-      else DriverSupersteps.compile(this, g)
+      g: Graph, backend: Option[PregelBackend], cap: Int = Pregel.DriverCap): PregelResult =
     backend match {
       case Some(PregelBackend.Driver) =>
-        driver.getOrElse(throw new IllegalArgumentException(
+        DriverSupersteps.compile(this, g).getOrElse(throw new IllegalArgumentException(
           "this Pregel program cannot run on the driver backend")).run()
-      case _ if driver.nonEmpty && DriverSupersteps.fits(g, cap) => driver.get.run()
-      case _ => runDistributed(g)
+      case Some(PregelBackend.Distributed) => runDistributed(g)
+      case None => runOnDriver(g, cap).getOrElse(runDistributed(g))
     }
-  }
+
+  /** The driver backend's result, or None (having run at most the size
+    * check) when the program or the graph does not allow it. For callers
+    * that keep their own loop for larger graphs. */
+  private[graft] def runOnDriver(g: Graph, cap: Int = Pregel.DriverCap): Option[PregelResult] =
+    DriverSupersteps.compile(this, g).filter(_ => DriverSupersteps.fits(g, cap)).map(_.run())
 
   /** The superstep loop both backends share. `step` runs one superstep
     * and returns the test "no vertex changed in it", evaluated only on the
@@ -260,8 +263,8 @@ final case class Pregel(
 }
 
 object Pregel {
-  /** Row cap of the driver backend: the vertices and the edges together
-    * must fit it. */
+  /** Row cap of the driver backend: the vertices must fit it, and so
+    * must the edges. */
   val DriverCap: Int = 100000
 
   private[pregel] val UPDATED = "_updated"

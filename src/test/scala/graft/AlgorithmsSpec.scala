@@ -138,6 +138,38 @@ class AlgorithmsSpec extends SparkSpec {
     assert(multi === Map(0L -> 0, 2L -> 0, 1L -> 1, 3L -> 1, 4L -> 2))
   }
 
+  test("BFS distances: driver and frontier engines agree; ids with no vertex row are not reached") {
+    import spark.implicits._
+    // 9 has no vertex row: 1->9 reaches nothing and 9->2 is never taken
+    val dangling = Graph(
+      (0L to 5L).toDF(ID),
+      Seq((0L, 1L), (1L, 9L), (9L, 2L), (1L, 3L), (3L, 1L), (4L, 5L)).toDF(SRC, DST))
+    val rnd = new scala.util.Random(5)
+    val random = Graph(
+      (0L until 60L).toDF(ID),
+      Seq.fill(90)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong)).toDF(SRC, DST))
+    val skip7 = col(SRC) =!= 7L
+    for ((graph, edgeExpr, want) <- Seq(
+        (dangling, lit(true), Some(Set(Seq(0L, 0), Seq(1L, 1), Seq(3L, 2)))),
+        (dangling, col(SRC) =!= 3L, Some(Set(Seq(0L, 0), Seq(1L, 1), Seq(3L, 2)))),
+        (dangling, col(DST) =!= 3L, Some(Set(Seq(0L, 0), Seq(1L, 1)))),
+        (random, lit(true), None), (random, skip7, None),
+        (random.copy(directed = false), lit(true), None),
+        (random.copy(directed = false), skip7, None))) {
+      def run(cap: Int) = BreadthFirstSearch.distances(
+        graph, col(ID) % 20L === 0L, edgeExpr, 30, graft.core.CheckpointPolicy.Local, cap)
+      val (driver, frontier) = (run(100000), run(2))
+      // the driver backend returns a local relation; the frontier loop does not
+      def local(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(local(driver) && !local(frontier))
+      assert(driver.schema === frontier.schema)
+      assert(!driver.schema("dist").nullable)
+      assert(rowSet(driver) === rowSet(frontier))
+      want.foreach(w => assert(rowSet(driver) === w))
+    }
+  }
+
   test("CheckpointPolicy.Reliable pins rounds to the checkpoint dir and matches Local") {
     import graft.core.CheckpointPolicy
     val g = Fixtures.twoComponents(spark, directed = false)

@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -116,6 +116,37 @@ class PregelBackendSpec extends SparkSpec {
     assert(jobs.contains("Pregel driver backend: size check"), jobs)
     assert(!jobs.contains("Pregel driver backend: collect"), jobs)
     assert(rowSet(declined.state) === rowSet(res.state))
+  }
+
+  test("the size cap holds for the vertices and the edges each on its own") {
+    val g = randomGraph(41, 30, 50).localCheckpointed() // 30 vertices, 54 edges
+    assert(cc.runOn(g, None, cap = 54).backend === Driver)
+    assert(cc.runOn(g, None, cap = 53).backend === Distributed)
+    assert(cc.runOn(g.copy(edges = g.edges.limit(20)), None, cap = 29).backend === Distributed)
+  }
+
+  test("a decline stops the size check once a frame passes the cap") {
+    val sc = spark.sparkContext
+    val parts = 200
+    val g = Graph(spark.range(0, 2L * parts, 1, parts).toDF(ID),
+      spark.range(0, 10).select(col("id").as(SRC), col("id").as(DST)))
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val finished = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.job.description") == "Pregel driver backend: size check")
+          e.stageIds.foreach(i => stages.add(i))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskInfo.successful) finished.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(cc.runOn(g, None, cap = 3).backend === Distributed)
+      jobsOf(()) // drains the listener bus
+    } finally sc.removeSparkListener(listener)
+    assert(stages.size === 1)
+    assert(finished.get < parts, s"${finished.get} partitions were counted")
   }
 
   test("programs that ask for the distributed plan, or cannot run on the driver, decline") {
